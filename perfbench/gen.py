@@ -28,8 +28,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-#: Input sizes. They are recorded in BENCHMARK.json's doc and in every
-#: artifact; changing them changes every metric.
+#: Input sizes. They are stated in BENCHMARK.json's workload notes and
+#: recorded in every artifact; changing them changes every metric.
 SIZES = {
     "flight_rows": 20_000,
     "weblog_lines": 20_000,

@@ -49,7 +49,7 @@ WARMUP_PASSES = 1
 MIN_WARM_PASSES = 3
 #: A pass during which the hypervisor stole more than this share of the
 #: host's CPU is recorded but not counted, and up to MAX_EXTRA_PASSES more
-#: are made: steal bursts of 13-18 % stretched passes up to 2x on a 4-vCPU VM.
+#: are made: steal bursts of 13-22 % stretched passes up to 2x on a 4-vCPU VM.
 STEAL_MAX = 0.02
 MAX_EXTRA_PASSES = 3
 #: Traced runs alternate plain and traced passes; this many traced ones.
@@ -74,6 +74,10 @@ def configure_env(work: str) -> None:
         os.makedirs(os.path.join(work, d), exist_ok=True)
     old = os.environ.get("PYTHONPATH")
     os.environ.update(
+        # No HotSpot perf-data file outside the work dir, for any JVM started.
+        JAVA_TOOL_OPTIONS=" ".join(
+            filter(None, [os.environ.get("JAVA_TOOL_OPTIONS"), "-XX:-UsePerfData"])
+        ),
         TMPDIR=os.path.join(work, "tmp"),
         SPARK_LOCAL_DIRS=os.path.join(work, "local"),
         SPARK_GRAFT_CPUS=str(SLOTS),
@@ -238,7 +242,7 @@ def _warm_passes(spark, wl, seconds: float, tracer) -> tuple[list[dict], int]:
             kinds = [p["kind"] for p in passes]
             traced = kinds.count("traced")
             if tracer is None:
-                enough = len(_counted(passes)) >= MIN_WARM_PASSES or (
+                enough = len(_quiet(passes)) >= MIN_WARM_PASSES or (
                     k - WARMUP_PASSES >= MIN_WARM_PASSES + MAX_EXTRA_PASSES
                 )
             else:  # end on a plain pass, so every traced one sits between two
@@ -247,12 +251,18 @@ def _warm_passes(spark, wl, seconds: float, tracer) -> tuple[list[dict], int]:
                 return passes, failed
 
 
+def _quiet(passes: list[dict]) -> list[dict]:
+    """Plain passes with at most ``STEAL_MAX`` of the host's CPU stolen."""
+    return [p for p in passes if p["kind"] == "plain" and p["steal"] <= STEAL_MAX]
+
+
 def _counted(passes: list[dict]) -> list[dict]:
-    """The plain passes the end-to-end metrics use: those with little CPU
-    stolen by the host, or every plain pass when too few were."""
-    plain = [p for p in passes if p["kind"] == "plain"]
-    quiet = [p for p in plain if p["steal"] <= STEAL_MAX]
-    return quiet if len(quiet) >= MIN_WARM_PASSES else plain
+    """The passes the end-to-end metrics use: the quiet ones, or every plain
+    pass when too few were quiet."""
+    quiet = _quiet(passes)
+    if len(quiet) >= MIN_WARM_PASSES:
+        return quiet
+    return [p for p in passes if p["kind"] == "plain"]
 
 
 def _run(args, workloads, name: str, work: str) -> int:
